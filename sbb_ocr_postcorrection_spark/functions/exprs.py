@@ -36,32 +36,15 @@ def cer_band_expr(col) -> Column:
     )
 
 
-def cents_expr(col) -> Column:
-    """Money column → exact integer cents (cross-engine-safe arithmetic;
-    see operators/relational.cents for the rationale)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.round(c * 100, 0).cast("long")
-
-
-def host_expr(url_col) -> Column:
-    """Host component of a url column (JVM-side)."""
-    c = F.col(url_col) if isinstance(url_col, str) else url_col
-    return F.element_at(F.split(F.element_at(F.split(c, "://"), -1), "/"), 1)
-
-
 def lang_cols(
-    text_col, stops_de, stops_en, conf_threshold: float = 0.05, toks=None
+    text_col, stops_de, stops_en, conf_threshold: float = 0.05
 ) -> dict[str, Column]:
     """Stopword-hit language-ID columns (P5 analog) — ONE definition shared
     by the batch operator (operators/textstats.lang_id, DuckDB
-    oracle-checked) and the streaming curation gate, so the two can never
-    drift — INCLUDING the lang_pass verdict and its threshold. Pass a
-    precomputed ``toks`` column to share one tokenization across several
-    builders (higher-order-function exprs are excluded from codegen
-    subexpression elimination, so unshared builders re-split the text per
-    derived column)."""
-    if toks is None:
-        toks = tokens_expr(text_col)
+    oracle-checked) and the host-reputation gate (operators/urls), so the
+    two can never drift — INCLUDING the lang_pass verdict and its
+    threshold."""
+    toks = tokens_expr(text_col)
     de_arr = F.array(*[F.lit(w) for w in stops_de])
     en_arr = F.array(*[F.lit(w) for w in stops_en])
     de_hits = F.size(F.filter(toks, lambda t: F.array_contains(de_arr, t)))
@@ -83,12 +66,10 @@ def lang_cols(
     }
 
 
-def quality_cols(text_col, toks=None) -> dict[str, Column]:
+def quality_cols(text_col) -> dict[str, Column]:
     """Quality-heuristic columns — shared between operators/textstats
-    .quality_score and the streaming curation gate (same sharing rationale
-    and ``toks`` parameter as lang_cols)."""
-    if toks is None:
-        toks = tokens_expr(text_col)
+    .quality_score and the classifier training labels built from it."""
+    toks = tokens_expr(text_col)
     # null ≡ empty here too: length(NULL) would make alpha_ratio — and
     # with it quality_keep — NULL instead of a definite fail verdict
     text_col = F.coalesce(text_col, F.lit(""))

@@ -1,17 +1,17 @@
-"""Arrow-batched Spark kernels wrapping the pure per-document kernel.
+"""Arrow-batched Spark kernel wrapping the pure per-document kernel.
 
-Both stages are ``mapInPandas`` iterator kernels (SURVEY.md §2.9 M1-M8
-mapping): Spark feeds Arrow batches, we run the *same* pure functions the
-oracle uses (kernel.py), so Spark output is byte-identical to the oracle by
-construction — the per-row invariant of BASELINE.json input_hint.
+Extraction is one ``mapInPandas`` iterator kernel (SURVEY.md §2.9 M1-M8
+mapping): Spark feeds Arrow batches, we run the *same* pure function the
+oracle uses (kernel.run_document), so Spark output is byte-identical to the
+oracle by construction — the per-row invariant of BASELINE.json input_hint.
 
 Scale notes:
 * html is BinaryType and KB-MB per row — callers must cap
-  ``spark.sql.execution.arrow.maxRecordsPerBatch`` (pipeline.py does) and
-  prune the column as soon as stage 1 consumed it;
-* the kernels are per-document pure functions: no cross-row state, no
+  ``spark.sql.execution.arrow.maxRecordsPerBatch`` (pipeline.py does); the
+  kernel consumes html and never emits it;
+* the kernel is a per-document pure function: no cross-row state, no
   shuffle, safe under task retries and speculative execution;
-* stage 2 routes internally on the stage-1 flags (the reference's
+* correction routes internally on the detector's flags (the reference's
   detector→translator routing, mt/cli_correct.py:1160-1186) — flagged spans
   only; no split/join of the DataFrame, so the whole extract is a single
   narrow stage.
@@ -19,21 +19,13 @@ Scale notes:
 
 from __future__ import annotations
 
-import json
 from collections.abc import Iterator
 
 import pandas as pd
 
-from .kernel import correct_document, detect_document, BlockDetection
+from .kernel import run_document
 
-# stage-1 output schema: html is dropped, detections carried as JSON
-DETECT_SCHEMA = (
-    "url string, warc_ts timestamp, host string, lang string, "
-    "detections string, n_blocks int, n_content_blocks int, "
-    "n_spans int, n_flagged int, chars_in long"
-)
-
-# stage-2 (final) schema — spans is a typed struct array (FIXTURES.md §1
+# output schema — spans is a typed struct array (FIXTURES.md §1
 # companion-table contract), not a JSON string
 EXTRACT_SCHEMA = (
     "url string, warc_ts timestamp, host string, lang string, "
@@ -49,80 +41,6 @@ def _host_of(url: str) -> str:
     return rest.split("/", 1)[0]
 
 
-def detect_stage(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Stage 1 mapInPandas kernel: (url, warc_ts, html, lang) → detections."""
-    for pdf in batches:
-        rows = []
-        for url, ts, html, lang in zip(
-            pdf["url"], pdf["warc_ts"], pdf["html"], pdf["lang"]
-        ):
-            detections, n_blocks, chars_in = detect_document(
-                bytes(html) if html is not None else b""
-            )
-            n_spans = sum(len(d.spans) for d in detections)
-            n_flagged = sum(d.n_flagged for d in detections)
-            rows.append(
-                {
-                    "url": url,
-                    "warc_ts": ts,
-                    "host": _host_of(url),
-                    "lang": lang,
-                    "detections": json.dumps(
-                        # spans are plain tuples; json serializes them as
-                        # [start, end, flagged] arrays directly
-                        [[d.block_index, d.text, d.spans] for d in detections],
-                        ensure_ascii=False,
-                    ),
-                    "n_blocks": n_blocks,
-                    "n_content_blocks": len(detections),
-                    "n_spans": n_spans,
-                    "n_flagged": n_flagged,
-                    "chars_in": chars_in,
-                }
-            )
-        yield pd.DataFrame(
-            rows,
-            columns=[
-                "url", "warc_ts", "host", "lang", "detections", "n_blocks",
-                "n_content_blocks", "n_spans", "n_flagged", "chars_in",
-            ],
-        )
-
-
-def correct_stage(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Stage 2 mapInPandas kernel: detections → corrected extracted_text."""
-    for pdf in batches:
-        out = pdf.copy()
-        texts, spans_col, chars_out = [], [], []
-        for det_json in pdf["detections"]:
-            detections = [
-                BlockDetection(
-                    block_index=bi,
-                    text=text,
-                    spans=tuple((s, e, f) for s, e, f in spans),
-                    n_flagged=sum(1 for s in spans if s[2]),
-                )
-                for bi, text, spans in json.loads(det_json)
-            ]
-            text, spans = correct_document(detections)
-            texts.append(text)
-            spans_col.append(
-                [{"start": s, "end": e, "flagged": f} for s, e, f in spans]
-            )
-            chars_out.append(len(text))
-        out = out.drop(columns=["detections"])
-        out["extracted_text"] = texts
-        out["spans"] = spans_col
-        out["chars_out"] = chars_out
-        yield out[
-            [
-                "url", "warc_ts", "host", "lang", "extracted_text", "spans",
-                "n_blocks", "n_content_blocks", "n_spans", "n_flagged",
-                "chars_in", "chars_out",
-            ]
-        ]
-
-
 def fused_extract_stage(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     """Fused detect→correct kernel: both stages inside ONE Python worker
     pass (the reference's in-kernel detector→translator routing,
@@ -130,8 +48,6 @@ def fused_extract_stage(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFram
     mapInPandas operators runs TWO Python workers per task (2× CPU
     oversubscription at full parallelism) and ships the bulky intermediate
     detections through the JVM — measured 6× slower at 32-way than fused."""
-    from .kernel import run_document
-
     for pdf in batches:
         # columnar build: list-of-row-dicts + dict-per-span was ~26% of
         # stage wall time (measured offline, 5000 docs: 0.42 s on a 1.17 s
@@ -174,17 +90,11 @@ def fused_extract_stage(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFram
         )
 
 
-def extract_pages(pages_df, two_stage: bool = False):
+def extract_pages(pages_df):
     """DataFrame-level extraction: pages → extraction table.
 
     ``pages_df`` needs columns (url, warc_ts, html, lang); extra columns are
-    pruned (never carry html further than stage 1). Default is the fused
-    single-worker kernel; ``two_stage=True`` materializes the stage-1
-    detections as a DataFrame boundary (useful when a caller wants to
-    persist/inspect detections between the stages).
+    pruned before the kernel, and html does not leave it.
     """
     src = pages_df.select("url", "warc_ts", "html", "lang")
-    if two_stage:
-        stage1 = src.mapInPandas(detect_stage, schema=DETECT_SCHEMA)
-        return stage1.mapInPandas(correct_stage, schema=EXTRACT_SCHEMA)
     return src.mapInPandas(fused_extract_stage, schema=EXTRACT_SCHEMA)

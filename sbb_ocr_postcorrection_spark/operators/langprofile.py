@@ -253,9 +253,9 @@ def _nb_model(spark: SparkSession, sf_dir: str, docs=None):
         .agg(F.count(F.lit(1)).cast("long").alias("n")),
     )
     nl = nlg.groupBy("lang").agg(F.sum("n").cast("long").alias("n_l"))
-    v = nlg.select("g").distinct().agg(
-        F.count(F.lit(1)).cast("long").alias("v")
-    )
+    # count(DISTINCT g) skips the NULL trigram of a NULL-text document,
+    # as in the SQL form
+    v = nlg.agg(F.countDistinct("g").cast("long").alias("v"))
     den = with_ilog2(
         nl.crossJoin(F.broadcast(v)).withColumn(
             "d1", (F.col("n_l") + F.col("v")).cast("long")
@@ -308,7 +308,10 @@ def lang_id_posterior(spark: SparkSession, sf_dir: str, docs=None) -> DataFrame:
     import pandas as pd
 
     d, _tri, model, w0, gatec = _nb_model(spark, sf_dir, docs)
-    w0_rows = sorted(w0.collect(), key=lambda r: r["cand"])
+    # NULLS LAST, as the SQL form orders cand
+    w0_rows = sorted(
+        w0.collect(), key=lambda r: (r["cand"] is None, r["cand"] or "")
+    )
     langs = [r["cand"] for r in w0_rows]
     if len(langs) < 2:
         # degenerate: no runner-up exists, so the relational form's inner
@@ -324,6 +327,8 @@ def lang_id_posterior(spark: SparkSession, sf_dir: str, docs=None) -> DataFrame:
     vocab: dict[str, int] = {}
     triples = []
     for r in model.collect():
+        if r["g"] is None:
+            continue  # a NULL trigram joins no document trigram (SQL =)
         gi = vocab.setdefault(r["g"], len(vocab))
         triples.append((gi, lang_idx[r["cand"]], r["w"]))
     # weight matrix defaulted to w0 per column: an unmatched trigram
@@ -347,13 +352,16 @@ def lang_id_posterior(spark: SparkSession, sf_dir: str, docs=None) -> DataFrame:
             for doc_id, true_lang, t in zip(
                 pdf["doc_id"], pdf["true_lang"], pdf["t"]
             ):
+                counts: dict[str | None, int] = {}
                 if t is None:
-                    continue  # null augmentation drops the doc (as in SQL)
-                n = len(t)
-                counts: dict[str, int] = {}
-                for i in range(max(n - 2, 1)):
-                    g = t[i : i + 3]
-                    counts[g] = counts.get(g, 0) + 1
+                    # a NULL augmentation (lang outside LID_PHRASES) is ONE
+                    # NULL trigram in the SQL form: matched by no class, so
+                    # it scores the all-unmatched w0 row
+                    counts[None] = 1
+                else:
+                    for i in range(max(len(t) - 2, 1)):
+                        g = t[i : i + 3]
+                        counts[g] = counts.get(g, 0) + 1
                 ll = np.zeros(n_l, dtype=np.int64)
                 for g, c in counts.items():
                     gi = vocab_.get(g)
@@ -382,11 +390,12 @@ def lang_id_posterior(spark: SparkSession, sf_dir: str, docs=None) -> DataFrame:
                     "gap": gap,
                     "gate": np.full(len(gap), gate_, dtype=np.int64),
                     "prob_pass": (gap > gate_).astype(np.int32),
-                    "correct": (
-                        np.array(out_pred) == np.array(out_true)
-                    ).astype(np.int32)
-                    if len(out_pred)
-                    else np.array([], dtype=np.int32),
+                    # NULL = anything is not a match (SQL CASE semantics)
+                    "correct": np.array(
+                        [int(p is not None and p == t_)
+                         for p, t_ in zip(out_pred, out_true)],
+                        dtype=np.int32,
+                    ),
                 }
             )
 
@@ -455,7 +464,9 @@ def lang_id_posterior_relational(
             .alias("ll"),
         )
     )
-    w_ = Window.partitionBy("doc_id").orderBy(F.desc("ll"), F.asc("cand"))
+    w_ = Window.partitionBy("doc_id").orderBy(
+        F.desc("ll"), F.asc_nulls_last("cand")
+    )
     ranked = ll.withColumn("rn", F.row_number().over(w_)).where(
         F.col("rn") <= 2
     )
@@ -480,6 +491,8 @@ def lang_id_posterior_relational(
             (F.col("ll_best") - F.col("ll_runner") > F.col("gate"))
             .cast("int")
             .alias("prob_pass"),
-            (F.col("pred_lang") == F.col("true_lang")).cast("int").alias("correct"),
+            F.coalesce(
+                (F.col("pred_lang") == F.col("true_lang")).cast("int"), F.lit(0)
+            ).alias("correct"),
         )
     )

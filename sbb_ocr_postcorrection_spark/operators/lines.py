@@ -134,13 +134,6 @@ def _doc_lines(d, n: int):
     )
 
 
-def _line_rows(d, n: int):
-    """Exploded (doc_id, pos, line) view of _doc_lines (0-based pos)."""
-    return _doc_lines(d, n).select(
-        "doc_id", F.posexplode("lns").alias("pos", "line")
-    )
-
-
 def _reassemble_arr(base, covered):
     """Shared r7 reassembly: ``base`` is the per-doc (doc_id, lns) array
     relation, ``covered`` a (doc_id, drop_pos: array<int>) relation of

@@ -101,59 +101,6 @@ def brute_force_topk(spark, sf_dir, n_probes: int = 5, k: int = 5) -> DataFrame:
     )
 
 
-def brute_force_topk_np(spark, sf_dir, n_probes: int = 5, k: int = 5) -> DataFrame:
-    """Arrow/NumPy variant of brute_force_topk — the 100-TB fast path: one
-    matmul per Arrow batch against the broadcast probe matrix instead of
-    per-pair interpreted array expressions (~50× less Python/expr overhead
-    at production dims). Results match the JVM version after rounding; the
-    JVM version stays the DuckDB-parity oracle (BLAS reduction order is
-    not bit-pinned)."""
-    import numpy as np
-    import pandas as pd
-
-    e = load(spark, sf_dir, "embeddings").repartition(
-        spark.sparkContext.defaultParallelism
-    )
-    probe_rows = (
-        e.filter(F.col("vec_id") < n_probes).select("vec_id", "embedding").collect()
-    )
-    if not probe_rows:  # empty probe set: empty result, not an np.AxisError
-        return spark.createDataFrame(
-            [], "probe_id long, rank int, cand_id long, cosine double"
-        )
-    probe_ids = np.array([r["vec_id"] for r in probe_rows])
-    P = np.array([r["embedding"] for r in probe_rows], dtype=np.float64)
-    Pn = P / np.linalg.norm(P, axis=1, keepdims=True)
-
-    def score(batches):
-        for pdf in batches:
-            mask = pdf["vec_id"] >= n_probes
-            if not mask.any():
-                continue
-            ids = pdf.loc[mask, "vec_id"].to_numpy()
-            C = np.array(list(pdf.loc[mask, "embedding"]), dtype=np.float64)
-            Cn = C / np.linalg.norm(C, axis=1, keepdims=True)
-            sims = Cn @ Pn.T  # (batch, probes)
-            out = pd.DataFrame(
-                {
-                    "probe_id": np.repeat(probe_ids, len(ids)),
-                    "cand_id": np.tile(ids, len(probe_ids)),
-                    "cosine": np.round(sims.T.ravel(), 4),
-                }
-            )
-            yield out
-
-    scored = e.select("vec_id", "embedding").mapInPandas(
-        score, schema="probe_id long, cand_id long, cosine double"
-    )
-    w = W.partitionBy("probe_id").orderBy(F.desc("cosine"), F.asc("cand_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("probe_id", "rank", "cand_id", "cosine")
-    )
-
-
 def ivf_topk(
     spark,
     sf_dir,

@@ -325,83 +325,6 @@ def _run_claimed(
     }
 
 
-def _list_parquet_files(spark: SparkSession, path: str) -> list[tuple[str, int]]:
-    """(path, bytes) of every *.parquet under `path`, via the Hadoop
-    FileSystem API — local glob would silently see an empty sink on
-    hdfs:// / s3a:// deployments (ADVICE r2 #4; same reason
-    operators/bucketing.write_bucketed uses this API)."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(p):
-        return []
-    out: list[tuple[str, int]] = []
-    it = fs.listFiles(p, True)
-    while it.hasNext():
-        st = it.next()
-        if st.getPath().getName().endswith(".parquet"):
-            out.append((st.getPath().toString(), int(st.getLen())))
-    return out
-
-
-def compact_extractions(
-    spark: SparkSession, output_dir: str, target_mb: int = 256
-) -> dict:
-    """Small-file compaction for the partitioned extraction sink.
-
-    Incremental resumed runs and fine-grained task parallelism leave each
-    (dt, bkt) partition with many small parquet files — the classic
-    scale killer for downstream scans (one task per file, metadata-bound
-    planning at 10^12 docs). Compaction rewrites each partition in one
-    pass: hash-repartition ON THE PARTITION COLUMNS so each (dt, bkt)
-    lands in one task, with `maxRecordsPerFile` (derived from the measured
-    bytes/row) splitting any partition that exceeds target_mb — hash
-    repartitioning alone can never split an oversized key. Already-compact
-    sinks short-circuit without rewriting a byte.
-
-    Durability note: dynamic partition overwrite is idempotent at the
-    partition level, but its commit (delete old dir, move staged files) is
-    not atomic on a plain filesystem — a crash inside the commit window
-    can lose that partition while the manifest still lists it as done. Run
-    compaction in a maintenance window or on a snapshot; the Iceberg-native
-    form (`rewrite_data_files`) commits atomically and is the production
-    swap-in.
-
-    Returns {files_before, files_after, partitions, skipped}."""
-    out_path = os.path.join(output_dir, "extractions")
-    files_before = _list_parquet_files(spark, out_path)
-    sizes = [s for _, s in files_before]
-    bytes_total = sum(sizes)
-    df = spark.read.parquet(out_path)
-    n_parts = df.select("dt", "bkt").distinct().count()
-    target_bytes = target_mb * 1024 * 1024
-    if len(files_before) <= n_parts and all(s <= 1.5 * target_bytes for s in sizes):
-        return {
-            "files_before": len(files_before),
-            "files_after": len(files_before),
-            "partitions": int(n_parts),
-            "skipped": True,
-        }
-    n_rows = df.count()
-    avg_row = max(bytes_total / max(n_rows, 1), 1.0)
-    max_records = max(int(target_bytes / avg_row), 1)
-    (
-        df.repartition(max(n_parts, 1), "dt", "bkt")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .option("maxRecordsPerFile", max_records)
-        .partitionBy("dt", "bkt")
-        .parquet(out_path)
-    )
-    files_after = _list_parquet_files(spark, out_path)
-    return {
-        "files_before": len(files_before),
-        "files_after": len(files_after),
-        "partitions": int(n_parts),
-        "skipped": False,
-    }
-
-
 def export_training_corpus(
     spark: SparkSession,
     sf_dir: str,

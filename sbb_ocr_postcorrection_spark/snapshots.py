@@ -174,6 +174,14 @@ def abort_commit(output_dir: str, ticket: dict) -> None:
         pass
 
 
+def _raise_id_taken(output_dir: str, ticket: dict):
+    raise ConcurrentWriteError(
+        f"snapshot v{ticket['next_id']} already exists in "
+        f"{output_dir} — another writer committed this id; "
+        "append-only history preserved, this commit is void"
+    ) from None
+
+
 def commit_snapshot(
     output_dir: str,
     ticket: dict,
@@ -187,6 +195,8 @@ def commit_snapshot(
     v{N}.json atomically AND exclusively (tmp + os.link — link fails
     loud if the id was somehow committed by someone else, unlike the
     silent os.replace overwrite; ADVICE r6), then release the intent.
+    On a filesystem without hardlinks the write falls back to an
+    exclusive create (open mode "x") plus fsync.
     `partitions` is the table's FULL visible partition set after this
     commit, as (dt_iso, bkt)."""
     if not _intent_matches(output_dir, ticket):
@@ -208,17 +218,24 @@ def commit_snapshot(
     if extra:
         snap.update(extra)
     path = _snap_path(output_dir, ticket["next_id"])
+    payload = json.dumps(snap, sort_keys=True)
     tmp = path + f".tmp.{ticket['nonce']}"
     with open(tmp, "w") as fh:
-        json.dump(snap, fh, sort_keys=True)
+        fh.write(payload)
     try:
         os.link(tmp, path)  # atomic + exclusive: raises if v{N} exists
     except FileExistsError:
-        raise ConcurrentWriteError(
-            f"snapshot v{ticket['next_id']} already exists in "
-            f"{output_dir} — another writer committed this id; "
-            "append-only history preserved, this commit is void"
-        ) from None
+        _raise_id_taken(output_dir, ticket)
+    except OSError:
+        # no hardlinks on this filesystem: an exclusive create is still
+        # exclusive, only not atomic for a reader racing the write
+        try:
+            with open(path, "x") as fh:
+                fh.write(payload)
+                fh.flush()
+                os.fsync(fh.fileno())
+        except FileExistsError:
+            _raise_id_taken(output_dir, ticket)
     finally:
         try:
             os.unlink(tmp)

@@ -4,13 +4,12 @@ The reference moved data through five ad-hoc file formats (JSON corpus
 dumps, SQLite, .npy, pickle, plain text — S5-S10); here one canonical
 schema flows through partitioned parquet (Iceberg-layout emulation; the
 container has no Iceberg jars — swapping the writer for
-``df.writeTo(...).overwritePartitions()`` is sink-local). JSON remains as a
-debug-dump sink only, mirroring the reference's S5 use.
+``df.writeTo(...).overwritePartitions()`` is sink-local).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+from pyspark.sql import DataFrame, SparkSession, types as T
 
 PAGES_SCHEMA = T.StructType(
     [
@@ -29,23 +28,6 @@ def read_pages(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.schema(PAGES_SCHEMA).parquet(path)
 
 
-def read_pages_pruned(
-    spark: SparkSession,
-    path: str,
-    *,
-    need_html: bool = True,
-    lang: str | None = None,
-) -> DataFrame:
-    """Scan with aggressive column pruning: metric-only consumers must
-    never read the html binary column (SURVEY.md §7.3 binary-heavy rows).
-    The lang predicate is pushed into the parquet scan."""
-    cols = ["url", "warc_ts", "lang"] + (["html"] if need_html else ["text"])
-    df = spark.read.schema(PAGES_SCHEMA).parquet(path).select(*cols)
-    if lang is not None:
-        df = df.filter(F.col("lang") == lang)
-    return df
-
-
 def write_extractions(df: DataFrame, path: str) -> None:
     """S6/S10-analog sink: idempotent overwrite of (dt, bkt) partitions
     (requires spark.sql.sources.partitionOverwriteMode=dynamic, set by
@@ -53,23 +35,3 @@ def write_extractions(df: DataFrame, path: str) -> None:
     reference's append=True default (preprocessing/database.py:14-15)."""
     df.write.mode("overwrite").partitionBy("dt", "bkt").parquet(path)
 
-
-def dump_debug_json(df: DataFrame, path: str, limit: int = 1000) -> None:
-    """S5-analog: tiny JSON debug dumps only (never a pipeline boundary)."""
-    df.limit(limit).coalesce(1).write.mode("overwrite").json(path)
-
-
-def write_bucketed(df: DataFrame, table: str, n_buckets: int = 16) -> None:
-    """Bucketed managed table on the join key: later url-equi-joins between
-    tables bucketed the same way are co-located — no exchange on either
-    side (the 100-TB join strategy for extraction↔enrichment joins).
-    Plain parquet paths cannot carry bucket metadata; this is the
-    `saveAsTable` flavor (Iceberg's bucket(url) transform is the cluster
-    equivalent)."""
-    (
-        df.write.mode("overwrite")
-        .bucketBy(n_buckets, "url")
-        .sortBy("url")
-        .format("parquet")
-        .saveAsTable(table)
-    )

@@ -20,7 +20,7 @@ from __future__ import annotations
 
 import re
 import unicodedata
-from collections.abc import Iterable, Iterator
+from collections.abc import Iterable
 
 
 def nfc(s: str) -> str:
@@ -34,14 +34,6 @@ _WS_RE = re.compile(r"\s+")
 def tokenize(s: str) -> list[str]:
     """Whitespace tokenization (F2); drops empty tokens."""
     return [t for t in _WS_RE.split(s) if t]
-
-
-_WORDPUNCT_RE = re.compile(r"\w+|[^\w\s]+", re.UNICODE)
-
-
-def wordpunct_tokenize(s: str) -> list[str]:
-    """Word/punctuation tokenizer (F17 analog)."""
-    return _WORDPUNCT_RE.findall(s)
 
 
 def _levenshtein_np(a: str, b: str) -> int:
@@ -291,20 +283,6 @@ def cer_clusters(ocr: str, gt: str) -> float:
     return d / n
 
 
-def char_ngrams(s: str, n: int) -> list[str]:
-    """Character n-grams of s (detector features)."""
-    if len(s) < n:
-        return [s] if s else []
-    return [s[i : i + n] for i in range(len(s) - n + 1)]
-
-
-def word_shingles(tokens: list[str], n: int) -> list[str]:
-    """Word n-gram shingles (dedup features)."""
-    if len(tokens) < n:
-        return [" ".join(tokens)] if tokens else []
-    return [" ".join(tokens[i : i + n]) for i in range(len(tokens) - n + 1)]
-
-
 def split_iter(s: str, sep: str = " ") -> list[str]:
     """Separator split, empty pieces dropped — same observable output as the
     reference's regex-generator split_iter (cli_preproc.py:29-35) on
@@ -343,58 +321,12 @@ def reassemble(parts: Iterable[str], sep: str = " ") -> str:
     return sep.join(parts)
 
 
-def sliding_windows(tokens: list[str], size: int = 4) -> Iterator[list[str]]:
-    """Token sliding windows, stride 1 (helpers.py:92-134 semantics): a
-    sequence shorter than `size` yields itself once; otherwise one window per
-    start position 0..len-size."""
-    if len(tokens) <= size:
-        if tokens:
-            yield tokens
-        return
-    for i in range(len(tokens) - size + 1):
-        yield tokens[i : i + size]
-
-
-def segment_runs(ids: list[int]) -> list[list[int]]:
-    """Gaps-and-islands segmentation of an int sequence: a gap of more than 1
-    starts a new run (helpers.py:137-223 semantics, W2)."""
-    runs: list[list[int]] = []
-    cur: list[int] = []
-    prev: int | None = None
-    for i in ids:
-        if prev is not None and i - prev != 1:
-            runs.append(cur)
-            cur = []
-        cur.append(i)
-        prev = i
-    if cur:
-        runs.append(cur)
-    return runs
-
-
-def _seq_labels(a: list, b: list, pad_to: int) -> list[int]:
-    """Shared label core: positional 1-correct/2-error over two sequences
-    space-padded to the longer length, then 0-padded to pad_to — ONE
-    definition for the code-point and grapheme-cluster views."""
-    n = max(len(a), len(b))
-    a = list(a) + [" "] * (n - len(a))
-    b = list(b) + [" "] * (n - len(b))
-    labels = [1 if x == y else 2 for x, y in zip(a, b)]
-    if pad_to > n:
-        labels += [0] * (pad_to - n)
-    return labels
-
-
 def char_labels(ocr: str, gt: str, pad_to: int = 0) -> list[int]:
     """Per-char equality labels: 1 correct, 2 error, 0 pad
     (cli_preproc.py:405-412 semantics, F8). Both strings space-padded to the
     longer length before comparison (F7)."""
-    return _seq_labels(list(ocr), list(gt), pad_to)
-
-
-def char_labels_clusters(ocr: str, gt: str, pad_to: int = 0) -> list[int]:
-    """char_labels over grapheme clusters of the NFC forms — dinglehopper's
-    unit (one label per visible glyph, SURVEY §7.3): a combining-mark error
-    yields ONE error label on its base cluster, not a spurious extra
-    position that shifts every later label."""
-    return _seq_labels(grapheme_clusters(nfc(ocr)), grapheme_clusters(nfc(gt)), pad_to)
+    n = max(len(ocr), len(gt))
+    labels = [1 if x == y else 2 for x, y in zip(ocr.ljust(n), gt.ljust(n))]
+    if pad_to > n:
+        labels += [0] * (pad_to - n)
+    return labels

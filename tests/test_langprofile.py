@@ -251,3 +251,42 @@ def test_posterior_kernel_equals_relational(spark):
         )
     )
     assert a == b and len(a) > 0
+
+
+def test_posterior_null_augmentation_matches_oracle(spark, tmp_path):
+    """A document whose lang has no LID_PHRASES entry (or is NULL) has a
+    NULL augmented text. The DuckDB oracle scores it as one unmatched
+    NULL trigram; the Arrow kernel and the relational form must emit the
+    same rows, whether the document sits in the training fold (10001) or
+    in the held-out fold (10005)."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    import __spark_entry__ as entrymod
+    from sbb_ocr_postcorrection_spark.operators import langprofile as _lp
+
+    base = pq.read_table(f"{SF.replace('sf0.001', 'sf0.01')}/documents.parquet")
+    extra = pa.table({
+        "doc_id": [10001, 10005],
+        "text": ["some text here", "autre texte"],
+        "lang": [None, "xx"],
+        "source": ["x", "x"],
+        "n_chars": [14, 11],
+    }).cast(base.schema)
+    sf = str(tmp_path)
+    pq.write_table(pa.concat_tables([base, extra]), f"{sf}/documents.parquet")
+
+    kernel = sorted(map(tuple, _lp.lang_id_posterior(spark, sf).collect()))
+    relational = sorted(
+        map(tuple, _lp.lang_id_posterior_relational(spark, sf).collect())
+    )
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM '{sf}/documents.parquet'"
+    )
+    oracle = sorted(
+        map(tuple, con.execute(entrymod.oracle_sql()["lang_id_posterior"]).fetchall())
+    )
+    assert kernel == relational == oracle
+    assert {r[0] for r in kernel} >= {10001, 10005}

@@ -9,23 +9,6 @@ from sbb_ocr_postcorrection_spark.wordlists import DICTIONARY, NOISE_SUBS
 SF = "/root/testdata/sf0.01"
 
 
-def test_ann_np_matches_jvm(spark):
-    from sbb_ocr_postcorrection_spark.operators.similarity import (
-        brute_force_topk,
-        brute_force_topk_np,
-    )
-
-    jvm = {
-        (r["probe_id"], r["rank"]): (r["cand_id"], r["cosine"])
-        for r in brute_force_topk(spark, SF).collect()
-    }
-    np_ = {
-        (r["probe_id"], r["rank"]): (r["cand_id"], r["cosine"])
-        for r in brute_force_topk_np(spark, SF).collect()
-    }
-    assert jvm == np_
-
-
 def test_ivf_recall_vs_brute_force(spark):
     """IVF with probe_lists=4 of 8 cells must recall most of the exact
     top-5 (random-ish embeddings: the true neighbors concentrate in the

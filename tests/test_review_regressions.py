@@ -367,80 +367,6 @@ def test_bpe_survives_u001f_in_corpus(spark, tmp_path):
     assert enc[0]["n_tokens"] == tok[0]["n_bpe_tokens"]
 
 
-def test_decontaminate_stream_empty_eval_set(spark, tmp_path):
-    # round-5 advice (low): an EMPTY eval relation built F.lit([]) with
-    # type array<void> and array_intersect failed analysis — a legitimately
-    # empty eval suite must mark every page clean instead of crashing
-    import pyarrow.parquet as pq
-
-    from sbb_ocr_postcorrection_spark.datagen import generate_pages, pages_to_arrow
-    from sbb_ocr_postcorrection_spark.streaming.curate_stream import (
-        decontaminate_stream,
-    )
-
-    d = tmp_path / "in"
-    d.mkdir()
-    pq.write_table(pages_to_arrow(generate_pages(6, seed=7)), str(d / "a.parquet"))
-    stream = (
-        spark.readStream.schema(
-            "url string, warc_ts timestamp, html binary, text string, lang string"
-        )
-        .parquet(str(d))
-    )
-    empty_evals = spark.createDataFrame([], "shingle string")
-    seen = []
-    q = (
-        decontaminate_stream(stream, empty_evals)
-        .writeStream.outputMode("append")
-        .foreachBatch(lambda b, _e: seen.extend(b.collect()))
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    assert len(seen) == 6
-    assert all(r["n_overlap"] == 0 and r["contaminated"] == 0 for r in seen)
-
-
-def test_decontaminate_stream_reserved_columns_raise(spark, tmp_path):
-    from sbb_ocr_postcorrection_spark.streaming.curate_stream import (
-        decontaminate_stream,
-    )
-
-    d = tmp_path / "in2"
-    d.mkdir()
-    spark.createDataFrame(
-        [("u", "t", 3)], "url string, text string, n_overlap int"
-    ).write.parquet(str(d / "a.parquet"))
-    stream = spark.readStream.schema(
-        "url string, text string, n_overlap int"
-    ).parquet(str(d))
-    evals = spark.createDataFrame([("a b c",)], "shingle string")
-    with pytest.raises(ValueError, match="reserves column"):
-        decontaminate_stream(stream, evals)
-
-
-def test_bloom_gate_stream_reserved_columns_raise(spark, tmp_path):
-    # round-5 advice (low): a caller's pre-existing content_hash column was
-    # silently clobbered (and, with drop=True, the clobbered value survived
-    # under the claim of a restored input schema) — now a loud refusal
-    from sbb_ocr_postcorrection_spark.streaming.dedup_stream import (
-        bloom_gate_stream,
-    )
-
-    d = tmp_path / "in3"
-    d.mkdir()
-    spark.createDataFrame(
-        [("u", 1, "t", "h")],
-        "url string, doc_id long, text string, content_hash string",
-    ).write.parquet(str(d / "a.parquet"))
-    stream = spark.readStream.schema(
-        "url string, doc_id long, text string, content_hash string"
-    ).parquet(str(d))
-    history = spark.createDataFrame([(99, "old text")], "doc_id long, text string")
-    with pytest.raises(ValueError, match="reserves column"):
-        bloom_gate_stream(stream, history)
-
-
 def test_phrase_search_empty_corpus_raises(spark, tmp_path):
     # round-5 advice (low): a corpus with no >=2-token document made the
     # self-derived probe collect come back empty → opaque IndexError

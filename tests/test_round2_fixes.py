@@ -265,55 +265,6 @@ def test_mets_escapes_source_attribute():
     ]
 
 
-# -------------------------------------------------------------- compaction --
-
-def test_compact_extractions_preserves_bytes(spark, tmp_path):
-    """Compaction must reduce file count without changing a single row
-    (byte-stable extracted text, same manifest)."""
-    import pyarrow.parquet as pq
-
-    from sbb_ocr_postcorrection_spark.datagen import generate_pages, pages_to_arrow
-    from sbb_ocr_postcorrection_spark.pipeline import (
-        compact_extractions,
-        run_extraction_job,
-    )
-
-    src = tmp_path / "pages.parquet"
-    pq.write_table(pages_to_arrow(generate_pages(120, seed=5)), str(src))
-    out = str(tmp_path / "job")
-    run_extraction_job(spark, spark.read.parquet(str(src)), out)
-
-    before = {
-        r["url"]: r["extracted_text"]
-        for r in spark.read.parquet(f"{out}/extractions").collect()
-    }
-    # fragment the sink: a keyless repartition spreads every (dt,bkt) over
-    # many tasks, producing several files per partition (what repeated
-    # resumed runs look like)
-    frag = spark.read.parquet(f"{out}/extractions").repartition(8)
-    (
-        frag.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("dt", "bkt")
-        .parquet(f"{out}/extractions")
-    )
-    stats = compact_extractions(spark, out)
-    after = {
-        r["url"]: r["extracted_text"]
-        for r in spark.read.parquet(f"{out}/extractions").collect()
-    }
-    assert after == before
-    assert not stats["skipped"]
-    assert stats["files_after"] < stats["files_before"]
-    assert stats["files_after"] == stats["partitions"] > 0
-    # second call: already compact -> short-circuits without rewriting
-    again = compact_extractions(spark, out)
-    assert again["skipped"] and again["files_after"] == stats["files_after"]
-    # resume still sees everything done after compaction
-    summary = run_extraction_job(spark, spark.read.parquet(str(src)), out)
-    assert summary["docs"] == 0 and summary["partitions_skipped"] > 0
-
-
 def test_persist_slot_unpersists_previous(spark):
     from sbb_ocr_postcorrection_spark.operators.relational import (
         _PERSIST_SLOTS,

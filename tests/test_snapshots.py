@@ -213,3 +213,37 @@ def test_next_id_assigned_after_claim(tmp_path):
     # append-only history preserved: the forged file was not replaced
     with open(forged) as fh:
         assert json.load(fh)["partitions"] == []
+
+
+def test_commit_without_hardlinks_falls_back_to_exclusive_create(tmp_path, monkeypatch):
+    """On a filesystem without hardlinks (os.link raises EPERM) the commit
+    still writes the same v{N}.json content, and a second commit of the
+    same id still fails loud."""
+    import errno
+
+    linked = str(tmp_path / "linked")
+    commit_snapshot(linked, begin_commit(linked), [("2024-01-01", 0)], op="append")
+
+    def no_link(src, dst):
+        raise OSError(errno.EPERM, "Operation not permitted", src)
+
+    monkeypatch.setattr(os, "link", no_link)
+    out = str(tmp_path / "out")
+    t1 = begin_commit(out)
+    snap = commit_snapshot(out, t1, [("2024-01-01", 0)], op="append")
+    with open(snapshots._snap_path(out, 1)) as fh:
+        on_disk = json.load(fh)
+    assert on_disk == snap
+    want = current_snapshot(linked)
+    assert {k: v for k, v in on_disk.items() if k != "created_at"} == {
+        k: v for k, v in want.items() if k != "created_at"
+    }
+    assert sorted(os.listdir(os.path.join(out, snapshots.SNAP_DIR))) == [
+        "v00000001.json"
+    ]
+    # a second commit of id 1 must not overwrite the committed snapshot
+    t2 = begin_commit(out)
+    with pytest.raises(ConcurrentWriteError):
+        commit_snapshot(out, {**t2, "next_id": 1}, [("2024-01-02", 3)], op="append")
+    with open(snapshots._snap_path(out, 1)) as fh:
+        assert json.load(fh) == snap

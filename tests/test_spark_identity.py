@@ -55,22 +55,8 @@ def test_metrics_match_oracle(spark, pages_df):
             r.chars_in, r.chars_out)
 
 
-def test_two_stage_equals_fused(spark, pages_df):
-    """The composable two-stage variant (detect → correct with a DataFrame
-    boundary) must produce byte-identical results to the fused kernel."""
-    fused = {
-        r["url"]: (r["extracted_text"], r["n_flagged"], r["chars_out"])
-        for r in extract_pages(pages_df).collect()
-    }
-    staged = {
-        r["url"]: (r["extracted_text"], r["n_flagged"], r["chars_out"])
-        for r in extract_pages(pages_df, two_stage=True).collect()
-    }
-    assert fused == staged
-
-
 def test_no_shuffle_in_extract_plan(spark, pages_df):
-    """The two-stage extract must be a single narrow pipeline — any Exchange
+    """The detect→correct extract must be a single narrow pipeline — any Exchange
     in the plan means we broke the per-document locality contract."""
     plan = extract_pages(pages_df)._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan, plan

@@ -70,19 +70,6 @@ def test_cer():
     assert tk.cer("", "") == 0.0
 
 
-def test_sliding_windows():
-    # helpers.py:92-134 semantics: short seq yields itself once
-    assert list(tk.sliding_windows(["a", "b"], 4)) == [["a", "b"]]
-    assert list(tk.sliding_windows(list("abcde"), 4)) == [
-        ["a", "b", "c", "d"], ["b", "c", "d", "e"]]
-
-
-def test_segment_runs():
-    # helpers.py:137-223 gaps-and-islands
-    assert tk.segment_runs([1, 2, 3, 7, 8, 12]) == [[1, 2, 3], [7, 8], [12]]
-    assert tk.segment_runs([]) == []
-
-
 def test_char_labels():
     # cli_preproc.py:405-412: 1 ok, 2 error, 0 pad
     assert tk.char_labels("abc", "abd") == [1, 1, 2]
@@ -157,17 +144,6 @@ def test_grapheme_clusters_lossless():
         assert all(tk.grapheme_clusters(s))
 
     check()
-
-
-def test_char_labels_clusters():
-    # plain ASCII: identical to code-point labels
-    assert tk.char_labels_clusters("abc", "abd") == tk.char_labels("abc", "abd")
-    assert tk.char_labels_clusters("ab", "ab", pad_to=4) == [1, 1, 0, 0]
-    # a multi-mark cluster error is ONE error label, and later positions
-    # stay aligned (code-point labels would shift them all)
-    ocr, gt = "x̃̄yz", "xyz"
-    assert tk.char_labels_clusters(ocr, gt) == [2, 1, 1]
-    assert len(tk.char_labels(ocr, gt)) == 5  # code-point view, shifted
 
 
 def test_cer_clusters_kernel_query(spark):

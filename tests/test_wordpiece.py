@@ -1,49 +1,9 @@
-"""Wordpiece vocab/tokenize/encode surface (reference F3-F6/A1 semantics)."""
-
-import pytest
+"""Wordpiece vocabulary build (reference A1/F3 semantics)."""
 
 from sbb_ocr_postcorrection_spark.functions import wordpiece as wp
 
 
-VOCAB = {p: wp.N_SPECIAL + i for i, p in enumerate(
-    ["der", "die", "was", "ser", "er", "as", "wa", "s", "w", "a", "d", "e", "r", "i"]
-)}
-REV = {v: k for k, v in VOCAB.items()}
-
-
-def test_greedy_tokenize_window_3_to_1():
-    # "wasser" → was + ser (greedy 3-wide first)
-    assert wp.greedy_tokenize("wasser", VOCAB) == ["was", "ser"]
-    # whitespace → <WSC>
-    assert wp.greedy_tokenize("der was", VOCAB) == ["der", "<WSC>", "was"]
-    # char missing from vocab → <UNK>, resume after it
-    assert wp.greedy_tokenize("wxs", VOCAB) == ["w", "<UNK>", "s"]
-
-
-def test_encode_decode_roundtrip():
-    line = "der wasser"
-    codes = wp.encode_line(line, VOCAB)
-    assert len(codes) == wp.SEQ_LEN
-    assert codes[0] == wp.SOS
-    assert wp.EOS in codes
-    assert codes[-1] == wp.PAD  # padded
-    assert wp.decode_codes(codes, REV) == "der wasser"
-
-
-def test_encode_truncates_not_drops():
-    # a long line truncates to seq_len — never the reference's silent
-    # tail-row dropping (helpers.py:49-61 bug class, SURVEY.md §7.3)
-    codes = wp.encode_line("wasser " * 30, VOCAB, seq_len=10)
-    assert len(codes) == 10
-
-
-def test_unk_decode():
-    codes = wp.encode_line("qqq", VOCAB)
-    assert wp.decode_codes(codes, REV) == "???"
-
-
-@pytest.mark.usefixtures("spark")
-def test_vocab_and_corpus_encode(spark):
+def test_build_vocab_counts_pieces(spark):
     df = spark.createDataFrame(
         [("wasser wasser der",), ("die wasser der die",)], "text string"
     )
@@ -53,10 +13,3 @@ def test_vocab_and_corpus_encode(spark):
     # 'der' appears as a full-token 3-gram twice and inside nothing else
     assert counts["der"] == 2
     assert counts["was"] == 3  # once per 'wasser'
-    vocab = wp.vocab_dict(vocab_rows)
-    enc = wp.encode_corpus(df, "text", vocab)
-    rows = enc.collect()
-    assert all(len(r["codes"]) == wp.SEQ_LEN for r in rows)
-    rev = {v: k for k, v in vocab.items()}
-    decoded = sorted(wp.decode_codes(r["codes"], rev) for r in rows)
-    assert decoded == sorted(["wasser wasser der", "die wasser der die"])
