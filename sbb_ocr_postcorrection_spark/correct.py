@@ -12,6 +12,16 @@ dependent; we pin it).
 
 Chosen over the torch seq2seq Translator because the graft's verified path
 must be byte-identical under distribution and retries (SURVEY.md §7.3).
+
+Almost every out-of-vocabulary token the detector and corrector look up
+is one that no confusion repair turns into a dictionary word; on pages
+with a long tail of such tokens, generating their candidates only to find
+none in the dictionary was most of the kernel's time. ``best_correction``
+therefore first looks the token up in ``_REACHABLE``, the 1,193 strings
+(a ~65 KB set table for the 95-word dictionary, built in a few ms at
+import) from which some dictionary word is reachable by one or two
+noisy→clean substitutions, and answers None at once for the rest. The
+prune is exact: see ``best_correction``.
 """
 
 from __future__ import annotations
@@ -22,6 +32,26 @@ from .textkit import levenshtein
 from .wordlists import CONFUSION_PAIRS, DICTIONARY
 
 _MAX_SUBS_PER_PATTERN = 4  # cap the candidate fan-out per pattern
+
+
+def _noisy_variants(words) -> set[str]:
+    """Every string that one clean→noisy replacement, at any occurrence
+    (overlapping included), makes of a word in `words` — the inverse of
+    one noisy→clean substitution step of `candidates`."""
+    out: set[str] = set()
+    for w in words:
+        for noisy, clean in CONFUSION_PAIRS:
+            i = w.find(clean)
+            while i >= 0:
+                out.add(w[:i] + noisy + w[i + len(clean):])
+                i = w.find(clean, i + 1)
+    return out
+
+
+_ONE_STEP = _noisy_variants(DICTIONARY)
+# tokens from which candidates() can reach a dictionary word
+_REACHABLE: frozenset[str] = frozenset(_ONE_STEP | _noisy_variants(_ONE_STEP))
+del _ONE_STEP
 
 
 def candidates(token: str) -> set[str]:
@@ -54,7 +84,20 @@ def candidates(token: str) -> set[str]:
 def best_correction(token: str) -> str | None:
     """Dictionary candidate with minimal edit distance, tie-break
     lexicographic (heuristics.py:196-199 argmin, determinism pinned).
-    Returns None when no candidate lands in the dictionary."""
+    Returns None when no candidate lands in the dictionary.
+
+    A token outside ``_REACHABLE`` gets None after one set lookup, without
+    generating candidates. This cannot change the answer: every candidate
+    is the token with one noisy→clean substitution applied, or two in
+    sequence. If candidate c is a dictionary word, undoing those steps
+    (clean→noisy at the same positions) rebuilds the token from c, so the
+    token is one or two clean→noisy replacements away from a dictionary
+    word — which is how ``_REACHABLE`` is built, over every occurrence and
+    without candidates()' per-pattern caps, making it a superset of every
+    token with a dictionary candidate. Tokens inside it take the full
+    candidate search unchanged."""
+    if token not in _REACHABLE:
+        return None
     hits = [c for c in candidates(token) if c in DICTIONARY]
     if not hits:
         return None

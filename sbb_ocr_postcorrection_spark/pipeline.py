@@ -28,16 +28,32 @@ N_URL_BUCKETS = 16
 N_SALTS = 8  # host-aggregation salting fan-out
 
 
+def host_session_defaults() -> tuple[int, str]:
+    """``(cores, driver_memory)`` for a local session on this host:
+    ``SPARK_GRAFT_CPUS``, else the CPUs this process may run on; and
+    ``SPARK_GRAFT_DRIVER_MEM``, else half of physical memory capped at
+    16g (a fixed 16g heap can exceed a small host's memory)."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS")
+    cores = int(cpus) if cpus else len(os.sched_getaffinity(0))
+    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if not mem:
+        phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+        mem = f"{min(phys // 2 // 2**20, 16 * 1024)}m"
+    return cores, mem
+
+
 def build_session(
     app: str = "sbb-extract",
     cores: int | None = None,
     shuffle_partitions: int | None = None,
     arrow_batch: int = 256,
 ) -> SparkSession:
-    """Tuned local session. ``arrow_batch`` caps Arrow batch row count so
+    """Tuned local session, sized by ``host_session_defaults`` unless
+    ``cores`` is given. ``arrow_batch`` caps Arrow batch row count so
     html-binary batches stay memory-bounded (SURVEY.md §7.3 binary-heavy
     rows)."""
-    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    default_cores, driver_mem = host_session_defaults()
+    cores = cores or default_cores
     shuffle_partitions = shuffle_partitions or max(cores, 8)
     # ship this package to Python workers regardless of the driver's cwd —
     # the local-mode analog of `spark-submit --py-files pkg.zip`
@@ -58,7 +74,7 @@ def build_session(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(arrow_batch))
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
         .config("spark.executorEnv.PYTHONPATH", py_path)
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", driver_mem)
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )
@@ -125,6 +141,20 @@ def salted_host_agg(
 
 def _manifest_path(output_dir: str) -> str:
     return os.path.join(output_dir, "_manifest")
+
+
+def _manifest_missing(output_dir: str) -> bool:
+    """True only when the manifest path provably does not exist (the
+    output directory is a local path, as for the snapshot log). Any other
+    stat failure answers False, so the caller goes through load_manifest,
+    which re-raises it."""
+    try:
+        os.stat(_manifest_path(output_dir))
+    except FileNotFoundError:
+        return True
+    except OSError:
+        pass
+    return False
 
 
 def load_manifest(spark: SparkSession, output_dir: str) -> DataFrame:
@@ -205,6 +235,9 @@ def run_extraction_job(
     snap = snapshots.current_snapshot(output_dir)
     if snap is not None:
         done_set = snapshots.snapshot_partition_set(snap)
+    elif _manifest_missing(output_dir):
+        # fresh table: nothing is done, and no Spark job is needed to say so
+        done_set = set()
     else:
         done_set = {
             (r["dt"].isoformat(), r["bkt"])

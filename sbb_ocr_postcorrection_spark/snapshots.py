@@ -175,6 +175,9 @@ def abort_commit(output_dir: str, ticket: dict) -> None:
 
 
 def _raise_id_taken(output_dir: str, ticket: dict):
+    """Release this writer's intent, then fail: the id is void, and a
+    held intent would block every later writer until reclaim_stale."""
+    abort_commit(output_dir, ticket)
     raise ConcurrentWriteError(
         f"snapshot v{ticket['next_id']} already exists in "
         f"{output_dir} — another writer committed this id; "

@@ -8,7 +8,7 @@ Cluster use (north_rule contract):
 
 Local sandbox use (this container):
     python scripts/run_job.py --input <pages.parquet> --output <dir> \
-        [--cores 32] [--lang de] [--no-resume] [--generate N]
+        [--cores N] [--lang de] [--no-resume] [--generate N]
 
 Any registry operator (dedup, curation, ANN, packing, …) runs the same
 way — the full library surface is cluster-submittable, not just the
@@ -34,7 +34,9 @@ def main() -> int:
     ap.add_argument("--input", help="pages parquet path")
     ap.add_argument("--output", required=True, help="output directory")
     ap.add_argument("--lang", default=None, help="language filter (e.g. de)")
-    ap.add_argument("--cores", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    ap.add_argument("--cores", type=int, default=None,
+                    help="local cores (default: SPARK_GRAFT_CPUS, else the "
+                         "CPUs this process may run on)")
     ap.add_argument("--no-resume", action="store_true", help="reprocess everything")
     ap.add_argument("--generate", type=int, default=0,
                     help="generate N synthetic pages as input first (demo mode)")

@@ -1,5 +1,7 @@
 """End-to-end job tests: partition layout, resume-from-manifest, salted agg."""
 
+import os
+
 import pyarrow.parquet as pq
 import pytest
 
@@ -106,6 +108,47 @@ def test_salted_host_agg_matches_plain(spark, pages_parquet):
 
 def test_manifest_empty_when_absent(spark, tmp_path):
     assert load_manifest(spark, str(tmp_path / "nope")).count() == 0
+
+
+def test_fresh_table_needs_no_manifest_read(spark, tmp_path, pages_parquet, monkeypatch):
+    """With neither snapshot log nor manifest, the done-set is empty
+    without a Spark read of the (absent) manifest."""
+    from sbb_ocr_postcorrection_spark import pipeline
+
+    def no_read(*args):
+        raise AssertionError("load_manifest called on a fresh table")
+
+    monkeypatch.setattr(pipeline, "load_manifest", no_read)
+    r = run_extraction_job(spark, spark.read.parquet(pages_parquet), str(tmp_path / "out"))
+    assert r["docs"] == 150 and r["partitions_skipped"] == 0
+
+
+def test_manifest_missing_only_when_not_found(tmp_path):
+    """Only FileNotFoundError means "no manifest"; another stat failure
+    (here a file where the output directory should be) is left to
+    load_manifest to raise."""
+    from sbb_ocr_postcorrection_spark.pipeline import _manifest_missing
+
+    assert _manifest_missing(str(tmp_path / "fresh"))
+    (tmp_path / "out" / "_manifest").mkdir(parents=True)
+    assert not _manifest_missing(str(tmp_path / "out"))
+    (tmp_path / "afile").write_text("")
+    assert not _manifest_missing(str(tmp_path / "afile"))
+
+
+def test_host_session_defaults(monkeypatch):
+    from sbb_ocr_postcorrection_spark.pipeline import host_session_defaults
+
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+    with open("/proc/meminfo") as fh:
+        total_kb = next(int(line.split()[1]) for line in fh if line.startswith("MemTotal:"))
+    cores, mem = host_session_defaults()
+    assert cores == len(os.sched_getaffinity(0))
+    assert mem == f"{min(total_kb // 2 // 1024, 16 * 1024)}m"
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "2g")
+    assert host_session_defaults() == (3, "2g")
 
 
 def test_export_training_corpus(spark, tmp_path):

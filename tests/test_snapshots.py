@@ -247,3 +247,19 @@ def test_commit_without_hardlinks_falls_back_to_exclusive_create(tmp_path, monke
         commit_snapshot(out, {**t2, "next_id": 1}, [("2024-01-02", 3)], op="append")
     with open(snapshots._snap_path(out, 1)) as fh:
         assert json.load(fh) == snap
+
+
+def test_id_collision_releases_own_intent(tmp_path):
+    """A commit that finds its snapshot id taken fails AND releases its
+    own intent, so the next writer claims the table without reclaim."""
+    out = str(tmp_path / "out")
+    t = begin_commit(out)
+    with open(snapshots._snap_path(out, t["next_id"]), "w") as fh:
+        json.dump({"snapshot_id": t["next_id"], "partitions": []}, fh)
+    with pytest.raises(ConcurrentWriteError):
+        commit_snapshot(out, t, [("2024-01-01", 0)], op="append")
+    assert not os.path.exists(snapshots._intent_path(out))
+    t2 = begin_commit(out)
+    assert t2["next_id"] == t["next_id"] + 1
+    commit_snapshot(out, t2, [("2024-01-01", 0)], op="append")
+    assert current_snapshot(out)["snapshot_id"] == t2["next_id"]
